@@ -80,10 +80,15 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     Incremental copy-on-write: the table is laid out as
     ``pkbucket=N`` hash-bucket partitions and a batch rewrites ONLY
     the buckets containing its keys — untouched buckets' files are
-    left byte-identical. A full-table rewrite per micro-batch (the
-    previous form, SCALE.md's top known limit) is O(table) per batch;
-    this is O(table · touched/n_buckets), which at 100 TB with
-    thousands of buckets approaches O(batch).
+    left byte-identical, so a batch costs O(table · touched/n_buckets)
+    rather than O(table). The touched buckets merge in ONE Spark
+    write whatever their number: one scan of the live touched
+    buckets, one anti-join against the batch's keys, one
+    ``partitionBy`` write into the stage ``<dim_path>._staging`` (a
+    sibling of the table, so readers never discover it), then each
+    touched bucket moves in by directory rename (see
+    :func:`_publish_dim_stage`). A touched bucket that merges to zero
+    rows is removed from the table.
 
     With ``op_col`` set, the batch is a CDC changelog slice: the
     latest row per pk decides — a ``delete_op`` row removes the pk
@@ -93,9 +98,10 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     snapshot_diff reconciliation test); anything else upserts. Apply
     is idempotent per pk, so batch replay after failure converges
     without markers."""
-    import shutil
-
     spark = batch.sparkSession
+    fs, P = store_fs(spark, dim_path)
+    stage = dim_path + "._staging"
+    _publish_dim_stage(fs, P, dim_path, stage)
     if order_col is not None:
         w = Window.partitionBy(pk).orderBy(F.desc(order_col))
         latest = (batch.withColumn("_rn", F.row_number().over(w))
@@ -112,41 +118,85 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
         # null-safe: a dirty row with op=NULL must UPSERT (it carries a
         # payload), not silently vanish — NULL != 'delete' is NULL,
         # which a plain filter would drop, deleting the key
-        upserts = latest.filter(
-            ~F.col(op_col).eqNullSafe(delete_op)).drop(op_col)
+        is_delete = F.col(op_col).eqNullSafe(delete_op)
+        upserts = latest.filter(~is_delete).drop(op_col)
     else:
+        is_delete = F.lit(False)
         upserts = latest
-    # bounded collect: at most n_buckets rows
-    touched = sorted(
-        r[0] for r in latest.select(DIM_BUCKET_COL).distinct().collect())
+    # bounded collect: at most n_buckets rows, each flagged with
+    # whether every row of the batch in that bucket is a delete
+    touched = dict(latest.groupBy(DIM_BUCKET_COL)
+                   .agg(F.min(is_delete.cast("int"))).collect())
+    if not touched:
+        latest.unpersist()
+        return
+    prefix = f"{DIM_BUCKET_COL}="
+    listed = fs.listStatus(P(dim_path)) if fs.exists(P(dim_path)) else []
+    buckets = {int(n[len(prefix):]) for n in
+               (st.getPath().getName() for st in listed)
+               if n.startswith(prefix)}
+    live = sorted(buckets & touched.keys())
+    merged = upserts
+    if live:
+        # allowMissingColumns: a mid-stream config change can evolve
+        # the dim's column set (the runtime-DDL path) — new columns
+        # arrive as nulls on old rows, removed ones stay null on new
+        # rows, mirroring Phoenix's additive ALTER behavior. The
+        # anti-join removes EVERY touched pk (deletes stay removed;
+        # upserts come back from the batch).
+        existing = (spark.read.option("basePath", dim_path)
+                    .option("mergeSchema", "true")
+                    .parquet(*[_bucket_path(dim_path, b) for b in live]))
+        merged = existing.join(latest.select(pk), pk, "left_anti") \
+                         .unionByName(upserts, allowMissingColumns=True)
+    fs.delete(P(stage), True)
+    # every touched bucket gets a stage directory up front: one the
+    # write leaves empty marks a bucket that merged to zero rows
     for b in touched:
-        bpath = os.path.join(dim_path, f"{DIM_BUCKET_COL}={b}")
-        try:
-            existing = spark.read.parquet(bpath)
-        except Exception:
-            existing = None
-        bkeys = latest.filter(F.col(DIM_BUCKET_COL) == b).select(pk)
-        brows = upserts.filter(F.col(DIM_BUCKET_COL) == b) \
-                       .drop(DIM_BUCKET_COL)
-        if existing is not None:
-            # allowMissingColumns: a mid-stream config change can
-            # evolve the dim's column set (the runtime-DDL path) —
-            # new columns arrive as nulls on old rows, removed ones
-            # stay null on new rows, mirroring Phoenix's additive
-            # ALTER behavior. The anti-join removes EVERY touched pk
-            # (deletes stay removed; upserts come back from brows).
-            merged = existing.join(bkeys, pk, "left_anti") \
-                             .unionByName(brows, allowMissingColumns=True)
-        else:
-            merged = brows
-        # two-phase swap per bucket: materialize to a staging dir,
-        # then republish — we cannot overwrite bpath while lazily
-        # reading from it
-        tmp = bpath + "._staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(bpath)
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.mkdirs(P(_bucket_path(stage, b)))
+    if all(touched.values()) and buckets <= touched.keys():
+        # an all-delete batch may empty the whole table: keep one
+        # schema-only bucket so read_dim still resolves the columns
+        spark.createDataFrame([], merged.drop(DIM_BUCKET_COL).schema) \
+             .write.mode("append").parquet(
+                 _bucket_path(stage, min(touched)))
+    # one task per bucket: each rewritten bucket lands as one file, so
+    # small files never pile up across micro-batches
+    (merged.repartition(DIM_BUCKET_COL).write.mode("append")
+     .partitionBy(DIM_BUCKET_COL).parquet(stage))
     latest.unpersist()
+    _publish_dim_stage(fs, P, dim_path, stage)
+
+
+def _bucket_path(table_path: str, bucket: int) -> str:
+    return f"{table_path}/{DIM_BUCKET_COL}={bucket}"
+
+
+def _publish_dim_stage(fs, P, dim_path: str, stage: str) -> None:
+    """Move a complete dim stage into the table bucket by bucket —
+    :func:`publish_store`'s rename publish, per bucket: each staged
+    ``pkbucket=N`` directory replaces the table's, and an empty one
+    removes it. Spark stamps the stage's _SUCCESS on job commit; a
+    stage without it is the leftover of a crash mid-write (the table
+    is untouched) and is discarded. The same call finishes a publish
+    a crash interrupted, since buckets already moved are gone from
+    the stage, so :func:`upsert_dim` runs it on entry too."""
+    if not fs.exists(P(stage)):
+        return
+    if fs.exists(P(stage + "/_SUCCESS")):
+        fs.mkdirs(P(dim_path))
+        for st in fs.listStatus(P(stage)):
+            name = st.getPath().getName()
+            if not name.startswith(f"{DIM_BUCKET_COL}="):
+                continue
+            dst = P(f"{dim_path}/{name}")
+            fs.delete(dst, True)
+            # FileSystem.rename reports failure by RETURNING false
+            if len(fs.listStatus(st.getPath())) and \
+                    not fs.rename(st.getPath(), dst):
+                raise RuntimeError(
+                    f"could not publish {name} into {dim_path}")
+    fs.delete(P(stage), True)
 
 
 def publish_store(staged_df: DataFrame, store_path: str) -> None:
@@ -256,8 +306,8 @@ def compact_table(spark, path: str,
 
     Compaction happens PER PARTITION DIRECTORY (batch_id=N,
     pkbucket=N, day=...): each leaf directory's files are rewritten
-    to ``target_files_per_partition`` via the same stage-then-
-    republish swap as upsert_dim's bucket rewrite — the hive layout,
+    to ``target_files_per_partition`` by staging the rewrite in a
+    ``._compact`` sibling and then republishing it — the hive layout,
     the batch_id column, downstream `batch_id < bid` state filters,
     and replay-overwrite semantics all survive, and no moment exists
     where the table as a whole is missing — with one caveat: the
@@ -341,31 +391,11 @@ def optimize_layout(df: DataFrame, path: str, range_cols: list[str],
     the files it must; the number is also the test's assertion
     surface. Metadata is read back footer-side (pyarrow), no data
     scan."""
-    import os
-
-    import pyarrow.parquet as pq
-
     (df.repartitionByRange(n_partitions, *range_cols)
        .sortWithinPartitions(*range_cols)
        .write.mode("overwrite").parquet(path))
 
-    key = range_cols[0]
-    spans = []
-    for fn in os.listdir(path):
-        if not fn.endswith(".parquet") or fn.startswith("."):
-            continue
-        md = pq.read_metadata(os.path.join(path, fn))
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.row_group(rg).num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == key and col.statistics:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            spans.append((lo, hi))
-    spans.sort()
+    spans = _file_spans(path, range_cols[0])
     disjoint = sum(1 for i in range(1, len(spans))
                    if spans[i][0] >= spans[i - 1][1])
     pct = 100 * disjoint // max(len(spans) - 1, 1)

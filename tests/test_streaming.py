@@ -87,13 +87,33 @@ def test_streaming_sinks(spark, tmp_path):
     assert got == {(1, "x"), (2, "y2"), (3, "z")}
 
 
+def _file_digests(root):
+    """{relative path: md5} of every file under ``root``."""
+    import hashlib
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(d, fn)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.md5(
+                    fh.read()).hexdigest()
+    return out
+
+
+def _buckets_of(spark, ids):
+    """{id: pk bucket} under upsert_dim's default bucketing."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    return dict(df.select("id", sinks.dim_bucket(F.col("id"))).collect())
+
+
 def test_upsert_dim_rewrites_only_touched_buckets(spark, tmp_path):
     """Incremental copy-on-write: a micro-batch whose keys hash to one
     bucket must leave every other bucket's files byte-identical (the
     100 TB requirement — a batch upsert must not rewrite the table)."""
-    import hashlib
-    import os
-
     from gmall_flink_2021_spark.streaming import sinks
 
     d = str(tmp_path / "dim_cow")
@@ -101,23 +121,13 @@ def test_upsert_dim_rewrites_only_touched_buckets(spark, tmp_path):
         [(i, f"v{i}") for i in range(40)], "id long, name string")
     sinks.upsert_dim(base, d)
 
-    def snap():
-        out = {}
-        for root, _, files in os.walk(d):
-            for fn in files:
-                p = os.path.join(root, fn)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, d)] = hashlib.md5(
-                        fh.read()).hexdigest()
-        return out
-
-    before = snap()
+    before = _file_digests(d)
     new_key = 1000
     bucket = spark.range(1).select(
         sinks.dim_bucket(F.lit(new_key).cast("long"))).collect()[0][0]
     sinks.upsert_dim(
         spark.createDataFrame([(new_key, "new")], "id long, name string"), d)
-    after = snap()
+    after = _file_digests(d)
     touched = f"{sinks.DIM_BUCKET_COL}={bucket}"
     untouched_before = {p: h for p, h in before.items()
                         if not p.startswith(touched)}
@@ -126,6 +136,177 @@ def test_upsert_dim_rewrites_only_touched_buckets(spark, tmp_path):
         assert after.get(path) == digest, f"untouched bucket changed: {path}"
     got = {r.id for r in sinks.read_dim(spark, d).collect()}
     assert got == set(range(40)) | {new_key}
+
+
+@pytest.mark.parametrize("complete", [True, False])
+def test_upsert_dim_leftover_stage_is_invisible_then_resolved(
+        spark, tmp_path, monkeypatch, complete):
+    """A crash between the merge write and its publish leaves the
+    stage behind. Readers must not see it (it lives beside the table,
+    not in it, so partition discovery never reads it as a bucket), and
+    the next upsert_dim must finish publishing a complete stage or
+    discard a partial one (no _SUCCESS: the table was untouched)."""
+    import os
+
+    from gmall_flink_2021_spark.streaming import sinks
+
+    d = str(tmp_path / "dim_crash")
+    rows = "id long, name string"
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], rows), d)
+
+    real_publish = sinks._publish_dim_stage
+    calls = []
+
+    def crash_on_publish(*args):
+        calls.append(1)
+        if len(calls) == 2:  # the first call only recovers
+            raise RuntimeError("crash before publish")
+        real_publish(*args)
+
+    monkeypatch.setattr(sinks, "_publish_dim_stage", crash_on_publish)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        sinks.upsert_dim(spark.createDataFrame(
+            [(5, "v5x"), (100, "v100")], rows), d)
+    monkeypatch.setattr(sinks, "_publish_dim_stage", real_publish)
+
+    stage = d + "._staging"
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+    left = sinks.read_dim(spark, d)
+    assert left.count() == 40
+    assert left.select("id").distinct().count() == 40
+    if not complete:
+        os.remove(os.path.join(stage, "_SUCCESS"))
+
+    sinks.upsert_dim(spark.createDataFrame([(200, "v200")], rows), d)
+    assert not os.path.exists(stage)
+    got = {r.id: r.name for r in sinks.read_dim(spark, d).collect()}
+    want = {i: f"v{i}" for i in range(40)}
+    want[200] = "v200"
+    if complete:
+        want.update({5: "v5x", 100: "v100"})
+    assert got == want
+
+
+def _changelog(spark, rows):
+    return spark.createDataFrame(rows, "op string, seq long, id long, "
+                                       "name string")
+
+
+def _apply(batch, d):
+    from gmall_flink_2021_spark.streaming import sinks
+
+    sinks.upsert_dim(batch, d, order_col="seq", op_col="op",
+                     transient_cols=("seq",))
+
+
+def test_upsert_dim_changelog_empties_one_bucket(spark, tmp_path):
+    """A changelog batch deleting every key of one bucket removes that
+    bucket's rows and leaves every other bucket byte-identical."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    d = str(tmp_path / "dim_del_bucket")
+    ids = range(40)
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"v{i}") for i in ids], "id long, name string"), d)
+    bucket_of = _buckets_of(spark, ids)
+    target = bucket_of[0]
+    victims = [i for i in ids if bucket_of[i] == target]
+    before = _file_digests(d)
+
+    _apply(_changelog(spark, [("delete", 1, i, None) for i in victims]), d)
+
+    touched = f"{sinks.DIM_BUCKET_COL}={target}"
+    after = _file_digests(d)
+    assert not any(p.startswith(touched + "/") for p in after)
+    untouched = {p: h for p, h in before.items()
+                 if not p.startswith(touched + "/")}
+    assert untouched and untouched == after
+    got = {r.id for r in sinks.read_dim(spark, d).collect()}
+    assert got == set(ids) - set(victims)
+
+
+def test_upsert_dim_changelog_empties_whole_table(spark, tmp_path):
+    """Deleting every key of the table leaves a table read_dim still
+    resolves: same columns, zero rows."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    d = str(tmp_path / "dim_del_all")
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], "id long, name string"), d)
+    _apply(_changelog(spark, [("delete", 1, i, None) for i in range(40)]), d)
+
+    got = sinks.read_dim(spark, d)
+    assert got.columns == ["id", "name"]
+    assert got.count() == 0
+
+
+def test_upsert_dim_changelog_replay_is_idempotent(spark, tmp_path):
+    """Applying the same changelog batch twice (a replay after a crash)
+    gives exactly the table one application gives."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    seed = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], "id long, name string")
+    batch = _changelog(spark, (
+        [("delete", 1, i, None) for i in range(0, 40, 3)]
+        + [("update", 1, i, f"u{i}") for i in range(1, 40, 3)]
+        + [("insert", 1, i, f"n{i}") for i in range(100, 110)]
+        # latest row per pk wins inside the batch
+        + [("insert", 2, 2, "late"), ("delete", 2, 100, None)]))
+    tables = []
+    for name, times in (("once", 1), ("twice", 2)):
+        d = str(tmp_path / name)
+        sinks.upsert_dim(seed, d)
+        for _ in range(times):
+            _apply(batch, d)
+        tables.append(sorted(map(tuple, sinks.read_dim(spark, d).collect())))
+    once, twice = tables
+    assert once == twice
+    got = dict(once)
+    assert 0 not in got and 100 not in got
+    assert got[1] == "u1" and got[2] == "late" and got[101] == "n101"
+
+
+def test_upsert_dim_schema_evolution_across_buckets(spark, tmp_path):
+    """One merge spanning several buckets widens the schema: rows of the
+    batch carry the new column, older rows read it back as NULL, and
+    buckets the batch does not touch keep their bytes."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    d = str(tmp_path / "dim_evolve")
+    ids = range(40)
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"a{i}") for i in ids], "id long, a string"), d)
+    bucket_of = _buckets_of(spark, ids)
+    # one existing key from each of three buckets, plus a new key
+    picked = {}
+    for i in ids:
+        picked.setdefault(bucket_of[i], i)
+    new_ids = list(picked.values())[:3]
+    assert len({bucket_of[i] for i in new_ids}) == 3
+    new_ids.append(1000)
+    touched = {f"{sinks.DIM_BUCKET_COL}={b}"
+               for b in _buckets_of(spark, new_ids).values()}
+    before = _file_digests(d)
+
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"a{i}!", f"b{i}") for i in new_ids],
+        "id long, a string, b string"), d)
+
+    after = _file_digests(d)
+    untouched = {p: h for p, h in before.items()
+                 if p.split("/")[0] not in touched}
+    assert untouched
+    for p, h in untouched.items():
+        assert after.get(p) == h, f"untouched bucket changed: {p}"
+    got = {r.id: r for r in sinks.read_dim(spark, d).collect()}
+    assert set(got) == set(ids) | {1000}
+    for i, r in got.items():
+        if i in new_ids:
+            assert (r.a, r.b) == (f"a{i}!", f"b{i}")
+        else:
+            assert (r.a, r.b) == (f"a{i}", None)
 
 
 def test_uv_sketch_rollup_streaming_matches_batch(spark, tmp_path):
