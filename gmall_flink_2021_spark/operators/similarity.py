@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.handles import CacheHandle
 from ..functions.vectors import as_double, cosine, dot, norm
+from ..sources.tables import dataset_signature  # noqa: F401
 
 
 # --------------------------------------------------------------------------
@@ -48,30 +49,6 @@ from ..functions.vectors import as_double, cosine, dot, norm
 
 _MEMO_MAX = 16
 _centroid_memo: dict = {}
-
-
-def dataset_signature(path: str):
-    """Hashable identity of a parquet file or directory: the absolute
-    path plus every data file's (relpath, size, mtime_ns).  Returns
-    None (→ memoization skipped) when the path can't be statted."""
-    try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-        ents = []
-        for root, _, files in os.walk(path):
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    continue  # _SUCCESS / .crc markers churn freely
-                fp = os.path.join(root, fn)
-                st = os.stat(fp)
-                ents.append((os.path.relpath(fp, path),
-                             st.st_size, st.st_mtime_ns))
-        if not ents:
-            return None
-        return (os.path.abspath(path), tuple(sorted(ents)))
-    except OSError:
-        return None
 
 
 def _memo_enabled() -> bool:

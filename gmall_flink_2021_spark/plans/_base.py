@@ -2,12 +2,12 @@
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import similarity
 from ..session import harden
-from ..sources.tables import load_table
+from ..sources.tables import dataset_signature, load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -31,10 +31,7 @@ def _emb_key(sf_dir: str):
     """Learned-parameter memo key for the embeddings table (see
     similarity.py module header): path + per-file size/mtime, so the
     memo self-invalidates when the data is regenerated in place."""
-    import os
-
-    return similarity.dataset_signature(
-        os.path.join(sf_dir, "embeddings.parquet"))
+    return dataset_signature(os.path.join(sf_dir, "embeddings.parquet"))
 
 _DRIFT_COLS = ("o_orderkey", "o_custkey", "o_orderstatus",
                "o_totalprice", "o_orderdate", "o_orderpriority")

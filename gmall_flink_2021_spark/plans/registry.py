@@ -48,16 +48,6 @@ from ._base import _PROFILE_COLS, _t  # noqa: F401
 from ._sql import _ri_rel_sql, _tok_expr  # noqa: F401
 from .events import q_visitor_stats_window  # noqa: F401  (driver entry)
 
-_FAMILY_MODULES = (_p_relational, _p_events, _p_dedup, _p_similarity,
-                   _p_text, _p_analytics, _p_quality)
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-for _m in _FAMILY_MODULES:
-    for _k in _m.QUERIES:
-        assert _k not in QUERIES, f"duplicate registry entry {_k}"
-    QUERIES.update(_m.QUERIES)
-    ORACLES.update(_m.ORACLES)
 
 # ---------------------------------------------------------------------------
 # Identity-gate oracle mirror: the documents pipeline is
@@ -75,7 +65,6 @@ for _m in _FAMILY_MODULES:
 # NULL never equi-joins, identically in both engines).  embeddings
 # are gated inside plans/similarity._EMB_VALID_SQL.
 # ---------------------------------------------------------------------------
-
 
 
 # ---------------------------------------------------------------------------
@@ -313,52 +302,22 @@ def _doubled_sql(sql: str, cols: tuple[str, ...]) -> str:
     return f"SELECT * REPLACE ({reps}) FROM (\n{sql}\n)"
 
 
-# ---------------------------------------------------------------------------
-# Grading priority: the driver grades the first ~50 registry entries per
-# round.  Order queries so every entry still lacking a driver-green
-# CORRECTNESS row (never graded, or graded before an output-contract
-# change) sits inside that window; stable-green entries rotate to the
-# back.  Rotate per round.
-# ---------------------------------------------------------------------------
+_FAMILY_MODULES = (_p_relational, _p_events, _p_dedup, _p_similarity,
+                   _p_text, _p_analytics, _p_quality)
 
-# Queries whose OUTPUT CONTRACT changed (new queries, semantics
-# changes), mapped to the round the change landed in — promoted to
-# the very front of the grading window until an artifact of that
-# round (or newer) has graded them green, because artifact-derived
-# staleness cannot know about in-flight changes. Append on change;
-# entries expire automatically once confirmed.
-# --- rotation invariant (round 8; ceiling decision round 9) ---------
-# The driver grades the first GRADE_WINDOW registry entries per round.
-# Documented ceiling: every live query's newest green CORRECTNESS row
-# must be from one of the last ROTATION_CEILING_ROUNDS rounds.
-#
-# Round-9 consolidation folded doc_length_percentiles into its
-# sketch audit (150 entries), which makes 3×50 arithmetically exact —
-# but the DECISION (VERDICT r8 #5's alternative) is to KEEP the
-# ceiling at FOUR rounds: a provable 3-round cycle offers 150 slots
-# with ZERO slack, so any single contract-change promotion (queries
-# needing a re-grade the round their output contract changes — 3-6
-# per round historically) displaces a stale re-grade past round 3.
-# The 4-round cycle offers 200 slots = 50 promotion-slack slots,
-# which `test_registry_fits_rotation_ceiling` enforces as a ≥20-slot
-# budget. Lowering to 3 honestly requires the registry at ≤130.
-#
-# Round-10 decision (VERDICT r9 #6): KEEP 150 entries + the 4-round
-# ceiling rather than folding to ≤147 — every remaining
-# near-duplicate pair gates a distinct plan feature (see the pruning
-# policy in the module docstring), and the slack arithmetic is now
-# REALIZED-order-enforced, not just documented:
-# `test_pending_promotions_are_in_next_window` asserts every pending
-# contract-change promotion sits inside the next grading window,
-# alongside the existing at-risk assertion — a starved rotation is a
-# failing suite before the driver ever runs.
-# `tests/test_rotation_invariant.py` computes the realized staleness
-# from the CORRECTNESS artifacts and FAILS the suite when any query
-# exceeds the ceiling or is about to (at-risk query not in the next
-# window) — the invariant is enforced by test, not by manual
-# arithmetic.
-GRADE_WINDOW = 50
-ROTATION_CEILING_ROUNDS = 4
+# Registry order is definition order: family by family, in the order
+# each module defines its entries.  Every query presents DOUBLE for
+# DECIMAL columns, and every _DECIMAL_OUT oracle does the same.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+for _m in _FAMILY_MODULES:
+    for _k, _fn in _m.QUERIES.items():
+        assert _k not in QUERIES, f"duplicate registry entry {_k}"
+        QUERIES[_k] = _doubled(_fn)
+    for _k, _sql in _m.ORACLES.items():
+        ORACLES[_k] = (_doubled_sql(_sql, _DECIMAL_OUT[_k])
+                       if _k in _DECIMAL_OUT else _sql)
+
 
 # ---------------------------------------------------------------------------
 # Oracle feasibility ceiling (VERDICT r8 #2, machine-readable).
@@ -413,200 +372,3 @@ def oracle_is_feasible(name: str, sf_dir: str) -> bool:
     ``sf_dir``'s replica factor (ORACLE_INFEASIBLE_ABOVE)."""
     return replica_factor(sf_dir) <= ORACLE_INFEASIBLE_ABOVE.get(
         name, 10**9)
-
-_CHANGED_THIS_ROUND: dict[str, int] = {
-    # (rounds 4-6 entries all confirmed green by their round's
-    # artifact — expired, removed)
-    # round 7: sketch queries upgraded from rows-only estimates to
-    # driver-gradeable audit forms (exact counters + in-band verdicts
-    # with real oracles). NOTE the window arithmetic: the registry
-    # holds 151 queries against a 50/round grading window, so a full
-    # ≤3-round rotation needs ≥151/3 ≈ 50.3 slots/round — it is
-    # over-subscribed by construction; these 3 promotions (one of
-    # which was due for re-grade anyway) push 3 stale-r4 queries to
-    # round 8, where they sort first.
-    "unique_visitors_daily_approx": 7,
-    "rolling_active_users_approx": 7,
-    "profile_sketch_report": 7,
-    # landed in round 7 but scheduled to GRADE in round 8 (their r6
-    # green is the freshest tier, and round 7's window is already
-    # over-subscribed by the three above) — the max_round guard in
-    # _finalize keeps a future-round entry from eating earlier slots
-    "uv_sketch_rollup": 8,
-    "doc_length_percentiles_approx": 8,
-    # ws_token_ct -> engine_token_ct rename (ADVICE r6); bpe_token_stats
-    # is r5-green so it re-grades in round 8 anyway — zero extra slots
-    "bpe_token_stats": 8,
-    # round 8: frame hashes became md5-of-hex-of-byte-slice (the
-    # adversarial-fuzz fix that makes multi-byte frame content oracle-
-    # expressible) — friendly-data hash VALUES change, so the contract
-    # is re-certified the round it next grades; frame_dedup is
-    # r6-green and rotates into round 9 anyway — zero extra slots
-    "frame_dedup": 9,
-    # round 9: the interpolated exact profile (former
-    # doc_length_percentiles entry) merged into the audit's output
-    # contract (p{50,90,99}_interp columns) — registry consolidation
-    # to 150 entries (VERDICT r8 #5); the audit re-grades in round 9
-    "doc_length_percentiles_approx": 9,
-    # round 10: image/audio payloads became REAL BMP/WAV containers
-    # genuinely parsed by _decode (VERDICT r9 #5); round 11: half the
-    # image corpus (doc_id%6!=0) became spec-valid zlib-compressed
-    # PNGs with a genuine stdlib inflate+defilter decode (VERDICT r10
-    # #3) — n_bytes/dims change for those rows, so both queries
-    # re-certify in round 11's window
-    "media_features": 11,
-    "media_resize": 11,
-    # round 12 (VERDICT r11 #1): queries whose PHYSICAL PLANS the r11
-    # optimization round restructured (outputs proven identical
-    # against the DuckDB oracle pre-commit, but their driver grades
-    # predate the restructure) — promoted so CORRECTNESS_r12 samples
-    # them first and the semantic-preservation claim stops being
-    # self-certified. Plus the two r8-stale names, and the query
-    # restructured in round 12 itself (media_text_alignment
-    # join-back removal).
-    "minhash_dedup_marks": 12,
-    "minhash_band_pairs": 12,
-    "minhash_jaccard_pairs": 12,
-    "minhash_signatures": 12,
-    "semdedup_prune": 12,
-    "kmeans_clusters": 12,
-    "profile_drift": 12,
-    "dup_clusters": 12,
-    "dedup_keep_best": 12,
-    "embedding_dups_lsh": 12,
-    "corpus_funnel": 12,
-    "corpus_filter": 12,
-    "near_dup_rate_by_source": 12,
-    "cross_source_dup_matrix": 12,
-    "dedup_provenance": 12,
-    "dedup_threshold_calibration": 12,
-    "frame_dedup": 12,
-    "media_text_alignment": 12,
-    "rfm_segments": 12,
-    "video_frame_samples": 12,
-}
-
-_GRADE_PRIORITY: tuple[str, ...] = (
-    # STATIC FALLBACK ordering, used only when no CORRECTNESS_r*.json
-    # artifacts are readable (fresh clone) — otherwise _finalize
-    # derives the order from artifact staleness automatically
-    # (self-rotating window; see _staleness_order).
-    # new/changed in round 4 (classifier scorer is new; nulls-last
-    # ranking; candidate cap):
-    "hashed_classifier_scores", "contrastive_pairs",
-    "minhash_jaccard_pairs",
-    # newest green row is from round 1:
-    "exact_dups", "minhash_signatures", "minhash_band_pairs",
-    "token_stats", "quality_scores", "lang_id", "fingerprints",
-    "knn_bruteforce", "simhash_signatures",
-    "label_centroid_similarity", "ivf_ann", "top_orders_per_segment",
-    "sessionize", "customers_without_orders", "media_features",
-    "late_shipment_priority", "funnel_conversion",
-    "video_frame_samples", "unique_visitors_daily_approx",
-    "top_supplier_per_nation", "corpus_filter", "train_val_split",
-    "order_count_distribution",
-    # newest green row is from round 2:
-    "dup_clusters", "dedup_summary", "simhash_band_pairs",
-    "repetition_stats", "doc_top_terms", "term_df_stats",
-    "bpe_token_stats", "lsh_ann", "norm_histogram", "pricing_summary",
-    "segment_revenue", "region_revenue", "top_brands", "gmv_daily",
-    "order_wide_stats", "visitor_stats_window", "event_stats_daily",
-    "province_stats_sql", "click_purchase_join", "gmv_daily_delta",
-    "priority_rollup", "revenue_forecast", "promo_revenue_share",
-    "disjunctive_revenue", "large_volume_customers", "bilateral_trade",
-    "top_revenue_supplier", "small_qty_part_revenue",
-    "high_balance_inactive_customers", "nation_year_revenue",
-    "purchase_attribution", "price_tier_stats", "region_segment_cube",
-    "stratified_sample", "media_resize",
-    "salted_brand_revenue", "purchase_click_window_join",
-    "hourly_activity_pivot", "retention_cohorts",
-    "native_session_windows", "quantization_error",
-    "returnflag_priority_stats", "part_supplier_variety",
-    "sole_late_suppliers", "grouping_sets_revenue",
-    "returnflag_part_overlap", "returned_item_customers",
-    "nation_market_share", "visitor_stats_sliding",
-)
-
-
-def _staleness_order(queries, root: str | None = None):
-    """Self-rotating grading window: the driver grades the FIRST 50
-    registry entries each round, so order queries by the round of
-    their newest green CORRECTNESS row (never-graded first, then
-    stalest), read from the CORRECTNESS_r*.json artifacts the driver
-    leaves in the repo root. Every round the window then rotates
-    automatically — no manual reorder. `_GRADE_PRIORITY` still jumps
-    the queue for queries whose OUTPUT CONTRACT changed this round
-    (not derivable from artifacts). Returns None when no artifacts
-    are readable (fresh clone) — the static list then stands alone."""
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__))))
-    latest: dict[str, int] = {}
-    found = False
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)", os.path.basename(p))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as fh:
-                rows = json.load(fh)
-        except Exception:
-            continue
-        found = True
-        for name, v in rows.items():
-            green = bool(v.get("hash_match")) or (
-                v.get("err") == "no_oracle"
-                and v.get("spark_rows") is not None)
-            if green and rnd > latest.get(name, 0):
-                latest[name] = rnd
-    if not found:
-        return None
-    names = list(queries)
-    order = sorted(names,
-                   key=lambda n: (latest.get(n, 0), names.index(n)))
-    max_round = max(latest.values(), default=0)
-    return order, latest, max_round
-
-
-def _finalize(
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]],
-    oracles: dict[str, str],
-) -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]],
-           dict[str, str]]:
-    staleness = _staleness_order(queries)
-    if staleness is None:
-        order = [n for n in _GRADE_PRIORITY if n in queries]
-        order += [n for n in queries if n not in _GRADE_PRIORITY]
-    else:
-        base, latest, _max_round = staleness
-        # promote contract-changed queries only until an artifact of
-        # the change's round (or newer) has graded them green — after
-        # that the change is confirmed and normal staleness rotation
-        # resumes (a stale promotion entry cannot waste window slots
-        # in later rounds, and a pre-change green row cannot expire
-        # the promotion early). A change stamped for a FUTURE round
-        # (chg > max_round + 1) stays dormant until that round
-        # arrives, so landing code early cannot eat earlier windows.
-        changed = [n for n, chg in _CHANGED_THIS_ROUND.items()
-                   if n in queries and latest.get(n, 0) < chg
-                   and _max_round >= chg - 1]
-        order = changed + [n for n in base if n not in changed]
-    q = {n: _doubled(queries[n]) for n in order}
-    o = {}
-    for n in order:
-        if n not in oracles:
-            continue
-        sql = oracles[n]
-        if n in _DECIMAL_OUT:
-            sql = _doubled_sql(sql, _DECIMAL_OUT[n])
-        o[n] = sql
-    return q, o
-
-
-QUERIES, ORACLES = _finalize(QUERIES, ORACLES)

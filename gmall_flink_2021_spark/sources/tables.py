@@ -15,6 +15,7 @@ naive-timestamp semantics in the oracle comparisons.
 from __future__ import annotations
 
 import os
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,43 +55,51 @@ def events_ts_is_nanos(path: str) -> bool:
         return False
 
 
-# Session-scoped TABLE memo (r12, guide §1/§6): `spark.read.parquet`
-# costs ~120 ms per call on this rig (py4j + file listing + footer
-# schema read), and the registry wrappers call load_table 2-3 times
-# per query — across a 150-query bench sweep that is tens of seconds
-# of pure repeated catalog work. Memoize the LAZY DataFrame per
-# (session, path, file-stat signature): this is table registration
-# (exactly what register_views/spark.table do), NOT result caching —
-# the DataFrame is an unresolved scan and every action still reads
-# the parquet bytes; the stat signature (mtime_ns, size) invalidates
-# the entry whenever the file/directory is regenerated in place
-# (directory mtime changes when part files are created/deleted).
-# Kill switch: SPARK_GRAFT_TABLE_MEMO=0.
-from weakref import WeakKeyDictionary
-
-_TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _stat_sig(path: str):
+def dataset_signature(path: str):
+    """Hashable identity of a parquet file or directory: the absolute
+    path plus every data file's (relpath, size, mtime_ns).  Returns
+    None (→ memoization skipped) when the path can't be statted."""
     try:
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+        ents = []
+        for root, _, files in os.walk(path):
+            for fn in files:
+                if fn.startswith(("_", ".")):
+                    continue  # _SUCCESS / .crc markers churn freely
+                fp = os.path.join(root, fn)
+                st = os.stat(fp)
+                ents.append((os.path.relpath(fp, path),
+                             st.st_size, st.st_mtime_ns))
+        if not ents:
+            return None
+        return (os.path.abspath(path), tuple(sorted(ents)))
     except OSError:
         return None
 
 
+# Session-scoped table memo: every `spark.read.parquet` pays a py4j
+# round trip, a file listing and a footer schema read, and the
+# registry wrappers call load_table 2-3 times per query.  Memoize the LAZY
+# DataFrame per (session, dataset_signature): this is table
+# registration (exactly what register_views/spark.table do), NOT
+# result caching — the DataFrame is an unresolved scan and every
+# action still reads the parquet bytes.  The signature covers every
+# data file's size and mtime, so a table regenerated in place (even a
+# part file rewritten under an unchanged directory mtime) misses.
+_TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    memo_on = os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0"
-    key = (path, _stat_sig(path))
-    if memo_on:
-        cache = _TABLE_MEMO.setdefault(spark, {})
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
-    df = _load_table_uncached(spark, path, name)
-    if memo_on:
-        cache[key] = df
+    key = dataset_signature(path)
+    if key is None:
+        return _load_table_uncached(spark, path, name)
+    cache = _TABLE_MEMO.setdefault(spark, {})
+    df = cache.get(key)
+    if df is None:
+        df = cache[key] = _load_table_uncached(spark, path, name)
     return df
 
 

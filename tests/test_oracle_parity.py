@@ -45,43 +45,16 @@ def test_entry_contract(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_grading_window_rotation_logic(tmp_path):
-    """The self-rotating grading window: never-graded queries first,
-    then stalest green; a contract-changed query is promoted until an
-    artifact of its change round (or newer) grades it green — a
-    PRE-change green row must not expire the promotion."""
-    import json
+def test_registry_order_is_definition_order():
+    """QUERIES keeps the order the family modules define their entries
+    in, and the driver contract hands that order through unchanged."""
+    import __spark_entry__ as e
 
-    from gmall_flink_2021_spark.plans.registry import _staleness_order
+    from gmall_flink_2021_spark.plans.registry import _FAMILY_MODULES
 
-    queries = {n: None for n in ("a", "b", "c", "d")}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "a": {"hash_match": True, "spark_rows": 1, "err": None},
-        "b": {"hash_match": True, "spark_rows": 1, "err": None},
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "b": {"hash_match": True, "spark_rows": 1, "err": None},
-        "c": {"hash_match": None, "spark_rows": 3, "err": "no_oracle"},
-    }))
-    order, latest, max_round = _staleness_order(queries, str(tmp_path))
-    # d never graded -> first; a green r1; b green r2; c rows-only r2
-    assert order[0] == "d"
-    assert order[1] == "a"
-    assert set(order[2:]) == {"b", "c"}
-    assert latest == {"a": 1, "b": 2, "c": 2}
-    assert max_round == 2
-    # promotion expiry semantics: a query changed in round 3 with its
-    # newest green row at r2 must still be promoted (2 < 3); once an
-    # r3 artifact grades it, it expires (3 >= 3)
-    assert latest.get("b", 0) < 3          # would promote
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({
-        "b": {"hash_match": True, "spark_rows": 1, "err": None}}))
-    _, latest2, _ = _staleness_order(queries, str(tmp_path))
-    assert not (latest2.get("b", 0) < 3)   # expired
-    # no artifacts at all -> None (static fallback stands alone)
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert _staleness_order(queries, str(empty)) is None
+    expected = [k for m in _FAMILY_MODULES for k in m.QUERIES]
+    assert list(QUERIES) == expected
+    assert list(e.queries()) == expected
 
 
 def test_doc_length_audit_keeps_null_lang_group(spark, tmp_path):

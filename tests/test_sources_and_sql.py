@@ -239,3 +239,36 @@ def test_micros_reads_unaffected_by_nanos_flag(spark, tmp_path):
     via_loader = load_table(spark, str(d), "events")
     assert dict(via_loader.dtypes)["ts"].startswith("timestamp")
     assert via_loader.count() == 2
+
+
+def test_load_table_memo_serves_until_rewrite(spark, tmp_path):
+    """The table memo hands back the same lazy DataFrame while the
+    data is unchanged, and a new one once a part file is rewritten in
+    place, where the directory's own mtime does not move."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gmall_flink_2021_spark.sources.tables import load_table
+
+    d = tmp_path / "memo_sf" / "region.parquet"
+    d.mkdir(parents=True)
+    part = d / "part-0.parquet"
+
+    def write(n):
+        pq.write_table(pa.table({
+            "r_regionkey": pa.array(range(n), pa.int64()),
+            "r_name": pa.array([f"r{i}" for i in range(n)]),
+        }), str(part))
+
+    write(3)
+    sf = str(tmp_path / "memo_sf")
+    first = load_table(spark, sf, "region")
+    assert load_table(spark, sf, "region") is first
+    assert first.count() == 3
+
+    dir_mtime = d.stat().st_mtime_ns
+    write(5)
+    assert d.stat().st_mtime_ns == dir_mtime
+    again = load_table(spark, sf, "region")
+    assert again is not first
+    assert again.count() == 5
